@@ -1,22 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{Limit, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.plans.ReadOnlyGuard
 import java.time.LocalDateTime
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /**
  * Query executor — Spark replacement for the reference's execution path
  * (`/root/reference/app/routes/query.py:42-57`): where the reference
- * registers a pandas frame into an embedded DuckDB connection and fetches the
- * whole result back, we register the DataFrame as a temp view named `df`
- * (`query.py:43`) and let Catalyst + whole-stage codegen run the SQL
- * distributed. The NL question path is generate → validate → execute →
- * duplicate-collapse, exactly the reference pipeline (`query.py:33-57`).
+ * registers a pandas frame into a per-request DuckDB connection and fetches
+ * the result once, we bind the DataFrame's plan to the name `df`
+ * (`query.py:43`) inside the parsed statement, let Catalyst + whole-stage
+ * codegen run it, and collect it once. Nothing is registered in the session
+ * catalog, so any number of callers may share one `SparkSession`. The NL
+ * question path is generate → validate → execute → duplicate-collapse,
+ * exactly the reference pipeline (`query.py:33-57`).
  */
 object Engine {
 
   /** Mirrors `QueryResult` (`/root/reference/app/schemas/models.py:24-26`),
-    * keeping the result distributed instead of `rows: List[Dict]`. */
+    * with the collected rows as a local DataFrame instead of
+    * `rows: List[Dict]`. */
   case class QueryResult(sql: String, result: DataFrame)
 
   /**
@@ -73,7 +82,8 @@ object Engine {
 
   /** Raised for the reference's HTTP-400 upload rejections
     * (`/root/reference/app/routes/upload.py:20-22`). */
-  final class UploadException(msg: String) extends IllegalArgumentException(msg)
+  final class UploadException(msg: String, cause: Throwable = null)
+    extends IllegalArgumentException(msg, cause)
 
   /**
    * Composed ingest entry point — port of `POST /upload`
@@ -81,7 +91,7 @@ object Engine {
    * else the reference's 400 "Only CSV files allowed") → CSV read with
    * schema inference (`pd.read_csv`) → column profiling (`profile_csv`).
    * Read errors surface as the reference's catch-all 400
-   * ("Error reading CSV: …", `upload.py:31-33`).
+   * ("Error reading CSV: …", `upload.py:31-33`), with the read error as cause.
    */
   def load(spark: SparkSession, path: String): (DataFrame, Seq[Profiler.ColumnInfo]) = {
     if (!path.endsWith(".csv"))
@@ -90,50 +100,87 @@ object Engine {
       val df = graft.sources.CsvSource.read(spark, path)
       (df, Profiler.profile(df))
     } catch {
-      case e: Exception => throw new UploadException(s"Error reading CSV: ${e.getMessage}")
+      case e: Exception => throw new UploadException(s"Error reading CSV: ${e.getMessage}", e)
     }
   }
 
-  /** Register + execute one validated SELECT over the session table `df`
-    * (`query.py:42-45`), then apply the duplicate collapse (`query.py:49-57`). */
+  /** Most rows one answer may collect to the driver. The validator's
+    * injected `LIMIT` keeps rule-generated SQL far below it; the cap bounds
+    * statements whose "limit" substring suppressed that injection
+    * (`a08_dedup_collapse` collects all 150,000 `orders` rows at sf0.1
+    * before the collapse folds them). */
+  val MaxCollectRows: Int = 500000
+
+  /**
+   * Execute one validated SELECT over the upload `df` (`query.py:42-45`)
+   * and apply the duplicate collapse (`query.py:49-57`), collecting once:
+   *  - [[graft.plans.ReadOnlyGuard]] parses the statement once and refuses
+   *    anything that is not a query;
+   *  - the upload's plan is bound to the name `df` as an outer CTE, so
+   *    Spark's CTE scoping resolves `df` (subqueries, any case, an inner
+   *    `WITH df` shadows it) and the session catalog is never written;
+   *  - the rows are collected once under `LIMIT MaxCollectRows + 1` (a
+   *    no-op when the statement's own `LIMIT` is smaller) and more than
+   *    [[MaxCollectRows]] rows fail the answer;
+   *  - the collapse runs on the collected rows, as the reference applies
+   *    it to the fetched frame.
+   * The result is a local DataFrame over the collected rows.
+   */
   def execute(spark: SparkSession, df: DataFrame, validatedSql: String): DataFrame = {
-    df.createOrReplaceTempView("df")
-    collapseDuplicates(spark.sql(toSparkSql(validatedSql)))
+    val query = ReadOnlyGuard.assertReadOnly(spark, toSparkSql(validatedSql))
+    val bound = UnresolvedWith(query, Seq(("df", SubqueryAlias("df", df.queryExecution.analyzed), None)))
+    val capped = DatasetBridge.ofRows(spark, Limit(Literal(MaxCollectRows + 1), bound))
+    // bounded-collect: engine-answer-cap (at most MaxCollectRows + 1 rows)
+    val rows = capped.collect()
+    require(rows.length <= MaxCollectRows,
+      s"result has more than $MaxCollectRows rows; add a LIMIT or aggregate")
+    collapseDuplicates(spark, capped.schema, rows)
   }
 
   /**
-   * Duplicate-row collapse, port of `query.py:49-57`: if the result contains
-   * any fully-duplicated row, group by ALL columns with a `count` and sort by
-   * count descending; otherwise pass through.
-   *
-   * Scale notes: the pandas original does `duplicated().any()` plus a
-   * groupby; here one hash aggregation computes the groups and a cheap
-   * `filter(count>1).limit(1)` probe on it decides the branch — two jobs over
-   * one shuffle, no driver materialization. Pandas `groupby` drops rows with
-   * null group keys (`dropna=True` default); we replicate by dropping
-   * fully-null-keyed rows in the collapse branch only.
+   * Duplicate-row collapse over collected rows, port of `query.py:49-57`:
+   * if any row is fully duplicated, group by ALL columns with a `count`
+   * (non-null long) sorted by count descending; otherwise pass the rows
+   * through. Pandas semantics are kept:
+   *  - `duplicated()` is null-safe and, like Spark's grouping, treats all
+   *    NaNs as one value and -0.0 as 0.0;
+   *  - `groupby` drops rows with a null or NaN in any column
+   *    (`dropna=True`, like Spark's `na.drop`), so null-only duplicates
+   *    still trigger the collapse but leave no group;
+   *  - `reset_index(name='count')` raises if a `count` column exists.
+   * The first row of each group stands for it; ties keep first-seen order.
    */
-  def collapseDuplicates(res: DataFrame): DataFrame = {
-    val cols = res.columns
-    if (cols.isEmpty) return res
-    // Temp name so the probe never collides with a user column named `count`
-    // (pandas only errors on that collision when duplicates actually exist).
-    val tmpCnt = "__graft_count"
-    // The duplicate PROBE runs on the FULL frame: pandas `duplicated()`
-    // treats NaN == NaN, and Spark's groupBy is likewise null-safe — a pair
-    // of identical null-keyed rows must trigger the collapse branch.
-    val fullGrouped = res.groupBy(cols.map(col).toIndexedSeq: _*)
-      .agg(count(lit(1)).as(tmpCnt))
-    val hasDuplicates = fullGrouped.filter(col(tmpCnt) > 1).limit(1).count() > 0
-    if (hasDuplicates) {
-      // pandas parity: reset_index(name='count') raises if `count` exists
-      require(!cols.contains("count"), "cannot insert count, already exists")
-      // ...but the GROUPING itself drops null-keyed rows (groupby dropna=True)
-      res.na.drop(cols.toIndexedSeq)
-        .groupBy(cols.map(col).toIndexedSeq: _*)
-        .agg(count(lit(1)).as("count"))
-        .orderBy(desc("count"))
-    } else res
+  def collapseDuplicates(spark: SparkSession, schema: StructType, rows: Array[Row]): DataFrame = {
+    val groups = mutable.LinkedHashMap.empty[Seq[Any], (Row, Long)]
+    for (row <- rows) {
+      val key = row.toSeq.map(groupKey)
+      groups(key) = groups.get(key).fold((row, 1L)) { case (first, n) => (first, n + 1) }
+    }
+    if (groups.size == rows.length)
+      return spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    require(!schema.fieldNames.contains("count"), "cannot insert count, already exists")
+    val collapsed = groups.values.toSeq
+      .filterNot { case (row, _) => row.toSeq.exists(isNa) }
+      .sortBy { case (_, n) => -n }
+      .map { case (row, n) => Row.fromSeq(row.toSeq :+ n) }
+    spark.createDataFrame(collapsed.asJava, schema.add("count", LongType, nullable = false))
+  }
+
+  /** Equality key for duplicate detection: `+ 0.0` turns -0.0 into 0.0,
+    * `doubleToLongBits` folds every NaN into one bit pattern, and binary
+    * values compare by content. */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+    case f: Float => java.lang.Float.floatToIntBits(f + 0.0f)
+    case b: Array[Byte] => b.toSeq
+    case other => other
+  }
+
+  private def isNa(v: Any): Boolean = v match {
+    case null => true
+    case d: Double => d.isNaN
+    case f: Float => f.isNaN
+    case _ => false
   }
 
   /**
@@ -151,11 +198,9 @@ object Engine {
 
   /** The AI-path contract: any externally produced SELECT, validated then
     * run. The validator keeps the reference's substring semantics for parity;
-    * deployments wanting plan-level hardening (catching side-effecting
-    * statements the blocklist misses, e.g. `CACHE TABLE … AS SELECT`) should
-    * additionally call [[graft.plans.ReadOnlyGuard.assertReadOnly]] and set
-    * `spark.graft.maxRows` for the optimizer-rule row cap
-    * ([[graft.plans.EnforceMaxRows]]). */
+    * [[execute]] then refuses at plan level what the blocklist misses (e.g.
+    * `CACHE TABLE … AS SELECT`) and caps the collected rows at
+    * [[MaxCollectRows]], which an alias containing "limit" cannot bypass. */
   def executeSql(spark: SparkSession, df: DataFrame, sql: String): QueryResult = {
     val validated = SqlValidator.validate(sql, df.columns.toIndexedSeq)
     QueryResult(validated, execute(spark, df, validated))

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-level session tuning shared by every driver-contract main
-  * (Bench/Verify/BenchOne/Debug/PhaseProfile/PlanDump) so measurements and
+  * (Bench/Verify/BenchOne/PhaseProfile/PlanDump) so measurements and
   * artifacts all run the same engine. Every value here is SCALE-HONEST:
   * none encodes the local core count or data size, and each is what a
   * production deployment of a ~700-query fleet would set (justifications

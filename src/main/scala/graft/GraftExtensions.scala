@@ -24,8 +24,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.definitions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // Plan-level row cap (active only when spark.graft.maxRows is set).
-    e.injectOptimizerRule(session => graft.plans.EnforceMaxRows(session))
   }
 }
 
@@ -88,15 +86,11 @@ object GraftExtensions {
       (exprs: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
 
-  /** Runtime registration on an existing session (functions + the row-cap
-    * rule via `experimental.extraOptimizations`, which unlike
-    * `withExtensions` can be attached to a live session). */
+  /** Runtime registration of the functions on an existing session, which
+    * unlike `withExtensions` can be attached to a live session. */
   def register(spark: SparkSession): Unit = {
     definitions.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.EnforceMaxRows]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.EnforceMaxRows(spark)
   }
 }

@@ -12,14 +12,16 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement
  * SELECT …`, `SET key=value`, or `REFRESH TABLE` contain none of the nine
  * blocked keywords and would execute. This guard parses the statement and
  * rejects anything that is not a pure query at the PLAN level, where
- * spelling tricks don't exist.
+ * spelling tricks don't exist. [[graft.Engine.execute]] runs every
+ * validated statement through it and executes the plan it returns.
  */
 object ReadOnlyGuard {
 
   final class NotReadOnlyException(msg: String) extends IllegalArgumentException(msg)
 
-  /** Parse `sql` and throw unless it is a side-effect-free query. */
-  def assertReadOnly(spark: SparkSession, sql: String): Unit = {
+  /** Parse `sql` and return its unresolved plan; throw unless it is a
+    * side-effect-free query. */
+  def assertReadOnly(spark: SparkSession, sql: String): LogicalPlan = {
     val plan = spark.sessionState.sqlParser.parsePlan(sql)
     val offender: Option[LogicalPlan] = plan.collectFirst {
       case c: Command => c
@@ -30,5 +32,6 @@ object ReadOnlyGuard {
       throw new NotReadOnlyException(
         s"not a read-only query: ${node.getClass.getSimpleName}")
     }
+    plan
   }
 }

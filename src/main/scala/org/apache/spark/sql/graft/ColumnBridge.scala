@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** `ExpressionUtils` is private[sql]; this bridge (inside the sql package
@@ -10,6 +11,14 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** `classic.Dataset.ofRows` is private[sql] too: it builds a DataFrame from
+  * a logical plan in the given session, analysing it eagerly as `spark.sql`
+  * does, without registering anything in the session catalog. */
+object DatasetBridge {
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }
 
 /** `AbstractDataType` (the type `ImplicitCastInputTypes.inputTypes` is

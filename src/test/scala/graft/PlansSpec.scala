@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.plans.ReadOnlyGuard
 
 class ReadOnlyGuardSpec extends AnyFunSuite {
@@ -25,35 +24,5 @@ class ReadOnlyGuardSpec extends AnyFunSuite {
     // ...while a column merely NAMED created_at is fine here (the ported
     // validator rejects it — documented substring quirk, A9)
     ReadOnlyGuard.assertReadOnly(spark, "SELECT created_at FROM t")
-  }
-}
-
-class EnforceMaxRowsSpec extends AnyFunSuite {
-
-  // runtime attachment — getOrCreate would return the suite-shared session,
-  // silently dropping withExtensions; register() works on a live session
-  private val spark: SparkSession = {
-    val s = SparkTestSession.spark
-    GraftExtensions.register(s)
-    s
-  }
-
-  test("plan-level cap applies when conf set, is transparent otherwise") {
-    import spark.implicits._
-    val df = (1 to 1000).toDF("n")
-    df.createOrReplaceTempView("numbers")
-    // the cap governs rows DELIVERED to the consumer (collect/write) — an
-    // aggregate action like count() re-roots the plan with a provably-small
-    // output and is deliberately left alone
-    try {
-      spark.conf.set("spark.graft.maxRows", "200")
-      assert(spark.sql("SELECT * FROM numbers").collect().length == 200)
-      // alias containing 'limit' cannot fool a plan-level rule (unlike A10)
-      assert(spark.sql("SELECT n AS rate_limit FROM numbers").collect().length == 200)
-      // explicitly-limited queries keep their smaller limit
-      assert(spark.sql("SELECT * FROM numbers LIMIT 7").collect().length == 7)
-      assert(spark.sql("SELECT COUNT(*) AS c FROM numbers").collect().head.getLong(0) == 1000)
-    } finally spark.conf.unset("spark.graft.maxRows")
-    assert(spark.sql("SELECT * FROM numbers").collect().length == 1000)
   }
 }

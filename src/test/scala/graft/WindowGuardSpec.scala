@@ -144,7 +144,9 @@ class WindowGuardSpec extends AnyFunSuite {
     "event-type-vocab" -> ("Analytics.scala",
       "channel vocabulary (distinct event types) — bounded domain, never rows"),
     "skipping-file-manifest" -> ("SkippingIndex.scala",
-      "file manifest paths — bounded by file count, the operator's output"))
+      "file manifest paths — bounded by file count, the operator's output"),
+    "engine-answer-cap" -> ("Engine.scala",
+      "one answer under LIMIT MaxCollectRows + 1; more rows fail the answer"))
 
   private val markerRe = """bounded-collect:\s*([A-Za-z0-9-]+)""".r.unanchored
 
